@@ -21,6 +21,15 @@ import graft.filter.Pred
   * standalone version of the same idea. The reference's id↔label int maps
   * and five hash indexes disappear: ids are just a column, lookups are
   * pushed-down filters.
+  *
+  * Reads resolve each immutable generation once, as the reference keeps
+  * its structures resident: [[VectorCollection.df]] memoizes the data
+  * relation keyed by the data dir's fingerprint (part-file names, lengths
+  * and mtimes — a commit from anywhere moves it), and the index readers
+  * go through `IndexStore.table`, which memoizes a ready index table's
+  * relation per (session, index path) until that path is rebuilt,
+  * mutated, advanced or invalidated. Index paths are themselves keyed by
+  * the data fingerprint, so a new generation never meets an old memo.
   */
 final case class CollectionConfig(name: String, dimensions: Int, metric: String) {
   def toJson: String =
@@ -52,6 +61,15 @@ final class VectorCollection(
   private def oldPath = new Path(s"$root/${config.name}/data_old")
   private def changelogPath = s"$root/${config.name}/changelog"
 
+  /** The live generation's relation, resolved once per generation: the
+    * memo key is the data dir's [[graft.index.IndexStore.fingerprint]]
+    * (a driver-side listing, no job). Every commit — by this instance,
+    * another instance over the same root, or another process — writes
+    * new part-file names, so the key moves and the next read resolves
+    * the new generation; a warm read skips the listing and footer
+    * schema-inference job of `spark.read.parquet`. */
+  @volatile private var dfMemo: (String, DataFrame) = null
+
   def df: DataFrame = {
     recover()
     // a clear contract violation beats the path-not-found the parquet
@@ -59,7 +77,14 @@ final class VectorCollection(
     // a schema, which an empty collection doesn't have yet)
     require(fs.exists(dataPath),
       s"collection '${config.name}' is empty — insert rows before reading")
-    spark.read.parquet(dataPath.toString)
+    val fp = graft.index.IndexStore.fingerprint(spark, Seq(dataPath.toString))
+    val memo = dfMemo
+    if (memo != null && memo._1 == fp) memo._2
+    else {
+      val d = spark.read.parquet(dataPath.toString)
+      dfMemo = (fp, d)
+      d
+    }
   }
 
   /** Crash recovery: if a swap died between retiring the old generation

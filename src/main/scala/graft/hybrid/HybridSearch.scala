@@ -146,10 +146,11 @@ object HybridSearch {
       keywordWeight: Option[Double] = None): DataFrame = {
     val a = resolveAlpha(vectorWeight, keywordWeight, alpha)
     if (queryTerms.isEmpty)
-      return vectorOnly(spark.read.parquet(s"$indexPath/vectors"), queryVec, k)
+      return vectorOnly(
+        graft.index.IndexStore.table(spark, indexPath, "vectors"), queryVec, k)
     val fetch = k * FetchFactor
     val qv = typedlit(queryVec)
-    val vecTop = spark.read.parquet(s"$indexPath/vectors")
+    val vecTop = graft.index.IndexStore.table(spark, indexPath, "vectors")
       .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
       .select("doc_id", "d")
       .orderBy(col("d"), col("doc_id"))
@@ -175,7 +176,7 @@ object HybridSearch {
     import org.apache.spark.sql.expressions.Window
     val fetch = k * FetchFactor
     val qv = typedlit(queryVec)
-    val vecTop = spark.read.parquet(s"$indexPath/vectors")
+    val vecTop = graft.index.IndexStore.table(spark, indexPath, "vectors")
       .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
       .select("doc_id", "d")
       .orderBy(col("d"), col("doc_id"))

@@ -77,11 +77,13 @@ object Bm25Index {
     * mid-append invalidates the index instead of serving half an update. */
   def append(spark: SparkSession, newDocs: DataFrame, path: String): Unit = {
     val toks = Bm25.tokenized(newDocs).persist()
+    // one doclens aggregate for the doclens append and the postings join,
+    // as in build()
+    val dls = Bm25.docLensFromToks(toks).persist()
     try {
-      Bm25.docLensFromToks(toks)
-        .write.mode("append").parquet(s"$path/doclens")
+      dls.write.mode("append").parquet(s"$path/doclens")
       Bm25.postingsFromToks(toks)
-        .join(Bm25.docLensFromToks(toks), "doc_id")
+        .join(dls, "doc_id")
         .withColumn("term_bucket", termBucketCol)
         .repartition(col("term_bucket"))
         .sortWithinPartitions("term")
@@ -89,7 +91,7 @@ object Bm25Index {
         .parquet(s"$path/postings")
       spark.catalog.refreshByPath(s"$path/doclens")
       writeStats(spark, path)
-    } finally { toks.unpersist(); () }
+    } finally { dls.unpersist(); toks.unpersist(); () }
   }
 
   /** stats = one-row aggregate of doclens; doubles over integer-valued
@@ -110,7 +112,7 @@ object Bm25Index {
   private def prunedPostings(spark: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
     val buckets = terms.map(termBucket).distinct
-    spark.read.parquet(s"$path/postings")
+    IndexStore.table(spark, path, "postings")
       .filter(col("term_bucket").isin(buckets: _*) &&
         col("term").isin(terms: _*))
       .select("term", "doc_id", "tf", "dl")
@@ -119,7 +121,8 @@ object Bm25Index {
   /** BM25 top-k against the prebuilt index: one pruned postings scan
     * (rows carry tf AND dl), a tiny broadcast df aggregate, a broadcast
     * stats row, score, top-k — no doclens join, no tokenization, no
-    * corpus scan. */
+    * corpus scan. The index tables resolve through [[IndexStore.table]]'s
+    * memo, so a warm query lists no files. */
   def search(spark: SparkSession, path: String, terms: Seq[String], k: Int)
       : DataFrame = {
     val qPost = prunedPostings(spark, path, terms.distinct)
@@ -127,7 +130,7 @@ object Bm25Index {
       .agg(countDistinct("doc_id").cast("double").as("df"))
     qPost
       .join(broadcast(docFreq), "term")
-      .crossJoin(broadcast(spark.read.parquet(s"$path/stats")))
+      .crossJoin(broadcast(IndexStore.table(spark, path, "stats")))
       .withColumn("idf", Bm25.idfCol)
       .withColumn("w", Bm25.weightCol)
       .groupBy("doc_id")
@@ -148,7 +151,7 @@ object Bm25Index {
     val ids = allowed.select("doc_id").distinct()
     // doclens is only needed to recompute the filtered corpus stats (one
     // aggregate); per-row dl comes from the postings rows themselves
-    val stats = spark.read.parquet(s"$path/doclens").join(ids, "doc_id")
+    val stats = IndexStore.table(spark, path, "doclens").join(ids, "doc_id")
       .agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
     val qPost = prunedPostings(spark, path, terms.distinct).join(ids, "doc_id")
     val docFreq = qPost.groupBy("term")

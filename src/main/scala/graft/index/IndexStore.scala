@@ -2,7 +2,7 @@ package graft.index
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persistent retrieval-index store: build once, search many times — the
   * reference keeps its BM25 inverted index and quantizer state alive in
@@ -22,6 +22,15 @@ import org.apache.spark.sql.SparkSession
   * At cluster scale `root` is a durable store path (set GRAFT_INDEX_ROOT);
   * locally it defaults to the JVM tmpdir so read-only testdata dirs are
   * never written to.
+  *
+  * Resolved relations of ready index tables are memoized ([[table]]):
+  * keyed by (session UUID, index path, table name), served only while the
+  * in-JVM `built` memo vouches for the index path, and dropped wherever
+  * that path's state is — before a build in [[ensure]], for the stale
+  * siblings ensure() deletes, in [[mutate]], [[advance]], [[invalidate]]
+  * and [[resetMemo]]. A warm probe therefore skips the listing and the
+  * footer schema-inference job of `spark.read.parquet`, and the memo
+  * holds at most one frame per (session, live index dir, table).
   */
 object IndexStore extends org.apache.spark.internal.Logging {
   /** Bump when any index table layout changes — old on-disk indexes from
@@ -186,7 +195,15 @@ object IndexStore extends org.apache.spark.internal.Logging {
               f.listStatus(parent).filter { st =>
                 st.getPath.getName.startsWith(kind + "_") &&
                   st.getPath.getName != new Path(path).getName
-              }.foreach(st => f.delete(st.getPath, true))
+              }.foreach { st =>
+                // the caller's spelling of the sibling path (listStatus
+                // qualifies it), so the memo keys match
+                val stale =
+                  path.take(path.lastIndexOf('/') + 1) + st.getPath.getName
+                built.remove(stale)
+                clearState(stale)
+                f.delete(st.getPath, true)
+              }
             f.delete(new Path(path), true)
             clearState(path)
             build(path)
@@ -209,8 +226,11 @@ object IndexStore extends org.apache.spark.internal.Logging {
       val f = fs(spark, path)
       // Drop the memo first: if change() throws, this process must not
       // keep serving the half-mutated index off the memo — the next
-      // ensure() re-checks ready() (marker gone) and rebuilds.
+      // ensure() re-checks ready() (marker gone) and rebuilds. The
+      // relation memo goes too: a frame resolved before the change lists
+      // the pre-change files.
       built.remove(path)
+      dropTables(path)
       f.delete(new Path(path, "_GRAFT_READY"), false)
       change(path)
       f.create(new Path(path, "_GRAFT_READY"), true).close()
@@ -279,7 +299,45 @@ object IndexStore extends org.apache.spark.internal.Logging {
   }
 
   /** Clear the in-JVM memo only (filesystem untouched). */
-  def resetMemo(): Unit = { built.clear(); stateCache.clear() }
+  def resetMemo(): Unit = { built.clear(); stateCache.clear(); tables.clear() }
+
+  // ---- resolved relations of ready index tables ([[table]]). Besides the
+  // footer schema-inference job, an uncached read of BM25 postings (64
+  // term_bucket dirs) pays a parallel listing job — Spark lists in
+  // parallel past 32 leaf dirs.
+  private val tables = new ConcurrentHashMap[(String, String, String), DataFrame]()
+
+  /** The relation of table `sub` of the index at `indexPath` — memoized
+    * per (session, index path, table) while `built` vouches for the path
+    * (it was ensured, mutated or advanced by this JVM), otherwise a plain
+    * read. A miss resolves under the path's lock (not the map's, which
+    * would hold a hash bin across the read's listing job), so a
+    * concurrent mutate() cannot leave a frame of the pre-mutation listing
+    * behind. */
+  def table(spark: SparkSession, indexPath: String, sub: String): DataFrame = {
+    def read = spark.read.parquet(s"$indexPath/$sub")
+    if (!built.contains(indexPath)) return read
+    val session = org.apache.spark.sql.graft.bridge.sessionUuid(spark)
+    val key = (session, indexPath, sub)
+    val hit = tables.get(key)
+    if (hit != null) hit
+    else locks.computeIfAbsent(indexPath, _ => new Object).synchronized {
+      val again = tables.get(key)
+      if (again != null) again
+      else if (!built.contains(indexPath)) read
+      else { val d = read; tables.put(key, d); d }
+    }
+  }
+
+  /** The memoized (index path, table) pairs, over all sessions (spec
+    * hook). */
+  private[graft] def memoizedTables: Seq[(String, String)] =
+    tables.keySet.toArray(Array.empty[(String, String, String)])
+      .toSeq.map(k => (k._2, k._3))
+
+  private def dropTables(indexPath: String): Unit = {
+    tables.keySet.removeIf(_._2 == indexPath); ()
+  }
 
   // ---- tiny driver-side index state (centroids, codebooks, thresholds,
   // augmentation constants): loaded from parquet with a listing + footer
@@ -316,5 +374,8 @@ object IndexStore extends org.apache.spark.internal.Logging {
   def invalidateState(pathPrefix: String): Unit = {
     stateCache.keySet.removeIf(_.startsWith(pathPrefix)); ()
   }
-  private def clearState(pathPrefix: String): Unit = invalidateState(pathPrefix)
+  private def clearState(path: String): Unit = {
+    invalidateState(path)
+    dropTables(path)
+  }
 }

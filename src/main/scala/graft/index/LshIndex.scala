@@ -194,7 +194,15 @@ object LshIndex {
     * grow from Bands to Bands·(1+BandBits) partitions (4 → 20 of 64);
     * the probe stays a partition filter, and the result's top-k is
     * always at-least-as-close as the single-probe result (candidate
-    * superset — pinned in IndexSpec). */
+    * superset — pinned in IndexSpec).
+    *
+    * Dedup without a shuffle: a vector has one bucket row per band, each
+    * with the same (id, score), so a candidate surfaces at most
+    * [[Ann.Bands]] times and the k nearest distinct ids lie within the
+    * top k·Bands rows — a bounded top-n, then `distinct` over at most
+    * k·Bands rows, then the final top-k. Exact (pinned against the
+    * `dropDuplicates(id)` form in LshSearchSpec) under the index's
+    * unique-id contract; the relation is [[IndexStore.table]]'s memo. */
   def search(spark: SparkSession, path: String, vecCol: String,
       idCol: String, queryVec: Seq[Double], dim: Int, k: Int,
       filter: Option[org.apache.spark.sql.Column] = None,
@@ -208,13 +216,16 @@ object LshIndex {
         col("band_idx") === b && col("band_val").isin(vals: _*)
       }
       .reduce(_ || _)
-    val base = spark.read.parquet(s"$path/buckets").filter(probe)
+    val base = IndexStore.table(spark, path, "buckets").filter(probe)
+    val byScore = Seq(col("score"), col(idCol))
     filter.map(base.filter).getOrElse(base)
-      .dropDuplicates(idCol) // a candidate may collide in several bands
       .withColumn("score",
         round(graft.knn.Knn.distance(metric, col(vecCol), qv), 6))
       .select(idCol, "score")
-      .orderBy(col("score"), col(idCol))
+      .orderBy(byScore: _*)
+      .limit(math.min(k.toLong * Ann.Bands, Int.MaxValue).toInt)
+      .distinct() // a candidate may collide in several bands
+      .orderBy(byScore: _*)
       .limit(k)
   }
 }

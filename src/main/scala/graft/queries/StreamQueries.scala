@@ -541,6 +541,9 @@ object StreamQueries {
           LshIndex.search(s, idx, "embedding", "vec_id", qv, D, K)
             .localCheckpoint()
         } finally {
+          // drop the scratch index's store memos (built flag, memoized
+          // bucket relation) with its dir — one per run otherwise
+          IndexStore.invalidate(s, idx)
           val p = new org.apache.hadoop.fs.Path(tmp)
           p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         }

@@ -36,4 +36,28 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(cachedPlans == 0,
       "operator leaked a persisted plan into the CacheManager")
   }
+
+  test("the index relation memo stays bounded across mutation cycles") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val coll = new graft.core.VectorDb(spark, root).createCollection("m", 8)
+    def batch(gen: Int) = (0 until 40).map(i =>
+        (s"id$i", i * 31 + gen, s"word$i word${(i + gen) % 7} cycle$gen"))
+      .toDF("id", "k", "text")
+      .select(col("id"), hashVector(col("k"), 8).as("vector"), col("text"))
+    coll.insertBatch(batch(0))
+    val mine = graft.index.IndexStore.slug(s"$root/m")
+    def memo = graft.index.IndexStore.memoizedTables.filter(_._1.contains(mine))
+    val sizes = (1 to 20).map { gen =>
+      coll.upsert(batch(gen))
+      coll.searchAnn(hashVectorValues(gen.toLong, 8), 5).collect()
+      coll.searchText(Seq(s"cycle$gen", "word3"), 5).collect()
+      val m = memo
+      assert(m.forall(e => graft.index.IndexStore.ready(spark, e._1)),
+        s"cycle $gen: memo holds a non-ready index path: $m")
+      m.size
+    }
+    assert(sizes.forall(_ == sizes.head) && sizes.head > 0,
+      s"memo size per cycle: $sizes")
+  }
 }
